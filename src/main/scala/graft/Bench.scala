@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the SURVEY §6 headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec",...scalars,"sf":...}`
+  * (per-query seconds and ratios go to the `BENCH_FULL.json` side file).
   *
   * - Materialises results through the `noop` sink so projections are not
   *   pruned away by a bare count() — the timing covers the full computation.
@@ -130,7 +131,8 @@ object Bench {
     // q_curation_ingest is corpus-wide but NOT benched: it re-runs
     // seven already-benched stage families end to end, so benching it
     // would double-count every one — the q_substr_strip precedent; its
-    // cost profile lives in CiProfileTool + PERF.md r11.)
+    // cost profile lives in PERF.md r11; re-time it with
+    // `runMain graft.Profile time q_curation_ingest`.)
     "q_redact_cards", "q_extract_links", "q_quantile_sketch",
     // r14: stupid-backoff scoring — trains BOTH reference models and
     // scores the corpus trigram stream, so it is the order-3 family's
@@ -178,8 +180,8 @@ object Bench {
     // (0.165 -> 0.42/0.51 idle warmed best-of-3) is harness context,
     // not code: the warm-up pass grew 13 -> 83 queries and the r8
     // round-robin experiment already measured that JIT/codegen-cache
-    // thrash at ~1.5x uniform. New base = r10 idle TimeTool warmed
-    // best-of-3 (0.425 / 0.514) x 1.3.
+    // thrash at ~1.5x uniform. New base = r10 idle warmed best-of-3
+    // (`graft.Profile time`) (0.425 / 0.514) x 1.3.
     "q_pack_chunks" -> 0.55, "q_pack_chunks_sharded" -> 0.67,
     // r6 operators: local warmed best-of-3 × 1.3 (the contended-driver
     // factor observed between local and driver runs since r4)
@@ -220,7 +222,7 @@ object Bench {
     // q_labelprop re-based TIGHTER in r11 (2.66 -> 1.55 = 1.19 warmed ×
     // 1.3) after the raw-vote repartition + eager per-round checkpoint
     // were replaced by map-side partial aggregation on the pipelined
-    // lazy-cache window (the pageRank shape; LabelpropProfile evidence)
+    // lazy-cache window (the pageRank shape; PERF.md r11 evidence)
     "q_kmeans" -> 1.25, "q_labelprop" -> 1.55,
     // r8 continuation 2: local warmed best-of-3
     // (1.12 / 0.66 / 0.54 / 0.30) × 1.3
@@ -301,7 +303,7 @@ object Bench {
     "q_metrics" -> 0.377, "q_dedup_exact" -> 0.240, "q_dedup_minhash" -> 1.183,
     "q_ann_brute" -> 0.302, "q_text_quality" -> 0.289, "q_topk_groups" -> 0.491,
     "q_ann_ivf" -> 0.650, "q_source_cap" -> 0.345,
-    // pack family re-based r10 (idle TimeTool warmed best-of-3) after a
+    // pack family re-based r10 (idle `graft.Profile time` best-of-3) after a
     // git bisect proved the dataflow byte-identical to the r5 pin — the
     // 0.165/0.260 originals are unreproducible under the 6x-larger
     // warm-up pass; evidence in PERF.md r10 and the budget comment above
@@ -322,7 +324,7 @@ object Bench {
     * may be moved ONLY with evidence that the code is not slower —
     * either a git bisect proving the dataflow byte-identical to the
     * pinned revision (the number was never reproducible), or an idle
-    * `Test/runMain graft.TimeTool <query>` warmed best-of-3 in the SAME
+    * `runMain graft.Profile time <query>` warmed best-of-3 in the SAME
     * harness context after a deliberate, documented plan change (the
     * q_labelprop r11 re-pin). "The suite got slower this round" is not
     * evidence — that is what the gate exists to catch. Drift that is
@@ -352,8 +354,8 @@ object Bench {
     "q_json_extract" -> 0.548, "q_json_stats" -> 0.705,
     "q_key_profile" -> 0.315, "q_kmeans" -> 0.737,
     // q_labelprop re-pinned after the r11 repartition/checkpoint rework
-    // (3.156 -> idle TimeTool 1.194; full-bench and TimeTool contexts
-    // agreed within 1% for this query pre-change)
+    // (3.156 -> idle `graft.Profile time` 1.194; full-bench and
+    // single-query contexts agreed within 1% for this query pre-change)
     "q_labelprop" -> 1.20, "q_line_dedup" -> 0.463,
     "q_lm_score" -> 0.915,
     // r14: pinned from the round's first settled full-harness run
@@ -597,26 +599,25 @@ object Bench {
     (results, bf, pf)
   }
 
+  /** One timed run: build `name` and materialise it through the `noop`
+    * sink; wall seconds. [[Profile]] and `ScaleEvidence` time with the
+    * same call. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(name: String): Double = Bench.runOnce(spark, sfDir, name)
 
     var failed = false
     // untimed warm-up pass: JIT, codegen compile, file listing, shuffle
@@ -670,14 +671,12 @@ object Bench {
     val blBreaches = if (!budgetsOn) Nil else baselineBreaches(results, runPinFactor)
     // the driver captures only the last ~2 KB of output, and through r16
     // its per-query parse never succeeded ("parsed": null in every
-    // BENCH_r*.json) because this line had outgrown that window — so the
-    // stdout line is kept COMPACT (3-decimal seconds; the ratio and
-    // drift MAPS move to BENCH_FULL.json, stdout keeps their counts)
-    // while the full-precision payload with every map goes to the
-    // BENCH_FULL.json side file. Measurement methodology is unchanged:
+    // BENCH_r*.json) because this line had outgrown that window — so
+    // stdout carries SCALARS ONLY (well under 1 KB whatever the query
+    // count); every per-query map and list goes to the BENCH_FULL.json
+    // side file, written after the stdout line and best-effort, like
+    // writePriorRatios. Measurement methodology is unchanged:
     // same queries, same warm-up, same best-of-3, same retries.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num3(v) }
-      .mkString("{", ",", "}")
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -700,13 +699,12 @@ object Bench {
     val scalars =
       s""""vs_baseline":${num3(vsBaseline)},"run_factor":${num3(runFactor)},""" +
       s""""pin_factor":${num3(runPinFactor)},"n_pin_drift":${drifting.size},""" +
-      s""""pin_drift_persistent":$persistentJson,"sf":"$sfDir""""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+      s""""n_pin_drift_persistent":${persistent.size},"sf":"$sfDir""""
+    println(s"""{"metric":"total","value":${num3(total)},"unit":"sec",$scalars}""")
+    scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +
         s""""vs_baseline_queries":$ratioJson,"pin_drift":$driftJson,""" +
-        s"$scalars}\n").getBytes("UTF-8"))
-    println(s"""{"metric":"total","value":${num3(total)},"unit":"sec",""" +
-      s""""queries":$qs,$scalars}""")
+        s""""pin_drift_persistent":$persistentJson,$scalars}\n""").getBytes("UTF-8")))
     persistent.foreach(q => System.err.println(s"[bench] PIN DRIFT (2 rounds): $q — " +
       "fix the regression or re-base the pin with evidence (Bench.pinnedSecs policy)"))
     // persist the normalized DRIFT SET, not raw ratios: a round run

@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Opinionated SparkSession factory with graft's recommended settings:
   * native function extensions, AQE with skew-join handling, UTC session
   * time, and nanos-parquet tolerance. `shufflePartitions` should track
-  * the cluster's total cores (locally: the `local[n]` n). */
+  * the cluster's total cores (locally: the `local[n]` n). Every main and
+  * the shared test session build through [[builder]]; `SessionFactorySpec`
+  * rejects any other builder call in `src/`. */
 object GraftSession {
 
   def builder(

@@ -182,7 +182,7 @@ object SparkEntry {
   /** One per-JVM scratch root for gate-internal artifacts (the z-order
     * write of q_skipping_scan, the minhash index of q_decontaminate_near):
     * repeated query invocations REUSE the same subdirectory (every
-    * writer below runs in overwrite mode), so Verify sweeps, TimeTool
+    * writer below runs in overwrite mode), so Verify sweeps, `graft.Profile`
     * loops, and dev reruns do not accumulate temp directories. */
   private lazy val gateScratch: String =
     java.nio.file.Files.createTempDirectory("graft_gate").toString

@@ -8,6 +8,7 @@ import org.json4s.jackson.JsonMethods
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 /** Bearer-token authentication policy for [[GovernanceHttpServer]] — the
   * twin of the reference's `bearer_token_dependency`
@@ -137,6 +138,7 @@ final class GovernanceHttpServer(contracts: ContractStore, gov: GovernanceBacken
                                    new graft.quality.DataQualityManager()) {
 
   private var server: Option[HttpServer] = None
+  private var pool: Option[ExecutorService] = None
 
   /** One `k=v&k=v` decode for query strings AND form bodies — the two
     * transports a parameter can arrive on must parse identically. */
@@ -812,15 +814,21 @@ final class GovernanceHttpServer(contracts: ContractStore, gov: GovernanceBacken
       }
     })
 
-    // small fixed pool: a metadata facade, not a data plane
-    s.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    // small fixed pool: a metadata facade, not a data plane. Its threads
+    // are non-daemon, so stop() must shut it down or they outlive the
+    // server and keep the JVM alive.
+    val workers = Executors.newFixedThreadPool(4, r => new Thread(r, "graft-http-worker"))
+    s.setExecutor(workers)
     s.start()
     server = Some(s)
+    pool = Some(workers)
     s.getAddress.getPort
   }
 
   def stop(): Unit = synchronized {
     server.foreach(_.stop(0))
     server = None
+    pool.foreach { p => p.shutdown(); p.awaitTermination(5, TimeUnit.SECONDS) }
+    pool = None
   }
 }

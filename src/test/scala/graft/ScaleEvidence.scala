@@ -145,11 +145,7 @@ object ScaleEvidence {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = s"/tmp/graft_scale_x$replicas"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder("local[32]", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -159,12 +155,7 @@ object ScaleEvidence {
       println(s"[scale] $t: " + spark.read.parquet(s"$outDir/$t.parquet").count() + " rows")
 
     def time(name: String, dir: String): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = Bench.runOnce(spark, dir, name)
       once() // warm-up
       math.min(once(), once())
     }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -177,6 +178,30 @@ class GraphSpec extends SparkSpec {
     val ccTwo = Graph.connectedComponents(two.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
     assert(ccTwo == Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L), s"$ccTwo")
+  }
+
+  test("lineage truncation releases superseded rounds: cache census is flat in iters") {
+    // the window checkpoints every 8 rounds and keeps only the latest
+    // checkpoint: 12 rounds cross one checkpoint, 28 cross three, and
+    // both must leave the same persisted RDDs behind
+    val edges = (1L to 30L).flatMap(i => Seq((i, i % 30 + 1), (i, (i * 7) % 30 + 1)))
+      .toDF("src", "dst")
+    val sc = spark.sparkContext
+    // RDDs this run persisted and left behind (ids, so the ContextCleaner
+    // reclaiming OTHER specs' caches meanwhile cannot skew the count)
+    def leftBehind(run: Int => DataFrame, iters: Int): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(iters)
+      out.count()
+      sc.getPersistentRDDs.keys.count(!before(_))
+    }
+    for ((label, run) <- Seq[(String, Int => DataFrame)](
+        "pageRank" -> (Graph.pageRank(edges, _)),
+        "labelPropagation" -> (Graph.labelPropagation(edges, _)))) {
+      leftBehind(run, 4) // builds the edge-side caches every run then shares
+      val (at12, at28) = (leftBehind(run, 12), leftBehind(run, 28))
+      assert(at12 == at28, s"$label: $at12 persisted RDDs after 12 rounds, $at28 after 28")
+    }
   }
 
   test("null endpoints drop; plan has no cartesian product") {

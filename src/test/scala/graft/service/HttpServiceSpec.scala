@@ -31,6 +31,26 @@ class HttpServiceSpec extends SparkSpec {
     (r.statusCode(), r.body())
   }
 
+  test("stop() shuts the request pool down: start/stop cycles leave no worker threads") {
+    def live = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName == "graft-http-worker").toSet
+    val before = live // another suite's still-running server, if any
+    def workers = (live -- before).size
+    val root = tmpDir("graft_http_cycle")
+    val store = new FsContractStore(s"$root/contracts")
+    val server = new GovernanceHttpServer(store, new GovernanceBackend(s"$root/governance", Some(store)))
+    for (_ <- 1 to 3) {
+      val port = server.start()
+      assert(getJson(s"http://127.0.0.1:$port/health")._1 == 200) // spawns a worker
+      assert(workers > 0)
+      server.stop()
+    }
+    // a worker can still be unwinding right after the pool terminates
+    val deadline = System.nanoTime() + 5000000000L
+    while (workers > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(workers == 0, "stop() left request-pool threads alive")
+  }
+
   test("remote contract store round-trips puts, gets, listings and latest") {
     withServer { (url, store, _) =>
       val remote = new HttpContractStore(url)
